@@ -1,19 +1,21 @@
 package graft.transform
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Hierarchy, Relational}
+import graft.operators.Relational
 
 /** The reference's two-phase hierarchical docs migration
   * (`etl/orchestrator.py:743-1000`): Mongo stores folder membership as
   * string paths; the relational target wants integer folder ids.
   *
-  * Phase 1 — folders, shallowest first: depth = slash count of the PARENT
-  * path (`:778-786`), full_path = parent + '/' + name (`:839-845`), ids
-  * assigned per level, each level's parent resolved against the accumulated
-  * path→id map with miss→root (`:834-835`). Phase 2 — files left-join the
-  * final map, miss→0 (`:914-923`). Role relations from both phases union
+  * Phase 1 — folders: full_path = parent + '/' + name (`:839-845`); the
+  * reference assigns ids level by level and resolves each level's parent
+  * against the accumulated path→id map with miss→root (`:778-786`,
+  * `:834-835`). A parent sits one level above its child, so resolving every
+  * folder against the complete map gives the same parents: ids follow path
+  * order and one path→id map serves both phases. Phase 2 — files left-join
+  * the same map, miss→0 (`:914-923`). Role relations from both phases union
   * into docs_roles (`:961-987`, U1).
   *
   * Folder ids are minted with a global sequence — folders are dim-sized by
@@ -28,7 +30,6 @@ object DocsHierarchy {
     *                  and `special_role_id` when a role dim was supplied)
     */
   def resolve(docsRuled: DataFrame): Result = {
-    val hasRole = docsRuled.columns.contains("special_role_id")
     val withParent = docsRuled.withColumn("fparent",
       coalesce(Shape.nullIfEmpty(col("_tmp_on_folder")), lit("/")))
 
@@ -36,53 +37,30 @@ object DocsHierarchy {
     val folders = withParent.filter(col("type") === "FOLDER")
     val files = withParent.filter(col("type") =!= "FOLDER")
 
-    // reference depth = slash count of the parent path ('/' -> 0)
-    val parentDepth = when(col("fparent") === "/", 0)
-      .otherwise(size(split(col("fparent"), "/")) - 1)
     val folderNodes = Relational.sequentialIds(
-        folders
-          .withColumn("fdepth", parentDepth + 1)
-          .withColumn("fpath", graft.functions.Scalars.pathConcat(col("fparent"), col("name"))),
+        folders.withColumn("fpath", graft.functions.Scalars.pathConcat(col("fparent"), col("name"))),
         "fpath", "__folder_id", 0L)
       .withColumn("__folder_id", col("__folder_id").cast("long"))
 
-    val spark = docsRuled.sparkSession
-    val root = spark.range(1).select(
-      lit("/").as("fpath"), lit(0L).as("__folder_id"), lit(0).as("fdepth"),
-      lit(null).cast("string").as("fparent"))
+    // the one path -> id map both phases resolve against: a folder's and a
+    // file's parent path each left-join it once, miss -> root (0)
+    val pathToId = broadcast(folderNodes.select(
+      col("fpath").as("__parent_path"), col("__folder_id").as("__parent_id")))
+    def place(df: DataFrame, id: Column): DataFrame = df
+      .join(pathToId, col("fparent") === col("__parent_path"), "left")
+      .withColumn("onFolder", coalesce(col("__parent_id"), lit(0L)))
+      .withColumn("id", id)
+      .drop("fpath", "__folder_id", "fparent", "__parent_path", "__parent_id")
+    val placed = place(folderNodes, col("__folder_id"))
+      .unionByName(place(files, lit(null).cast("long"))) // files keep sink-assigned ids
 
-    val resolved = Hierarchy.resolveParentsDirect(
-      root.unionByName(
-        folderNodes.select(col("fpath"), col("__folder_id"), col("fdepth"), col("fparent")),
-        allowMissingColumns = false),
-      "__folder_id", "fpath", "fparent", "fdepth", rootId = 0L)
-
-    val folderOut = folderNodes
-      .join(broadcast(resolved.select(col("__folder_id"), col("parent_id"))), Seq("__folder_id"))
-      .withColumn("onFolder", col("parent_id"))
-      .withColumn("id", col("__folder_id"))
-      .drop("parent_id", "fpath", "fdepth", "__folder_id", "fparent")
-
-    // phase 2: files resolve the final path -> id map, miss -> root (0)
-    val pathToId = resolved.filter(col("__folder_id") =!= 0)
-      .select(col("fpath"), col("__folder_id"))
-    val fileOut = files
-      .join(broadcast(pathToId), files("fparent") === pathToId("fpath"), "left")
-      .withColumn("onFolder", coalesce(col("__folder_id"), lit(0L)))
-      .withColumn("id", lit(null).cast("long")) // files keep sink-assigned ids
-      .drop("fpath", "__folder_id", "fparent")
-
-    val docs = folderOut.unionByName(fileOut)
-      .drop(docsRuled.columns.filter(_.startsWith("_tmp_")): _*)
-
-    val rolesSource = if (hasRole) folderOut.unionByName(fileOut) else folderOut.limit(0)
     val docsRoles =
-      if (hasRole)
-        rolesSource.filter(col("special_role_id").isNotNull)
+      if (docsRuled.columns.contains("special_role_id"))
+        placed.filter(col("special_role_id").isNotNull)
           .select(col("mongo_id"), col("special_role_id").as("role_id"))
       else
         docsRuled.sparkSession.emptyDataFrame
 
-    Result(docs, docsRoles)
+    Result(placed.drop(docsRuled.columns.filter(_.startsWith("_tmp_")): _*), docsRoles)
   }
 }

@@ -1,12 +1,18 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ReEncrypt, AesCbc}
-import graft.model.Destination
+import graft.model.{Destination, Entities}
 import graft.post.Denormalize
-import graft.run.Pipeline
+import graft.run.{EntityStages, Pipeline}
+import graft.sources.JsonSource
 import graft.transform.{Projections, Rules}
 import graft.validate.Checks
 
@@ -251,6 +257,175 @@ class EntityPipelineSpec extends SparkSpecBase {
     assert(user.getAs[Long]("province_id") === 1L) // resolved against upstream dim
     // sink wrote parquet per (destination, entity)
     assert(spark.read.parquet(s"$tmp/postgres/user").count() === 1L)
+  }
+
+  /** A pass-through stage for `dests` that records its call and the dims it
+    * was handed.
+    */
+  private def recording(calls: mutable.Buffer[(String, Set[String])], name: String,
+      dests: Destination*): Pipeline#Stage = (src, dims) => {
+    calls.synchronized { calls += name -> dims.keySet }
+    dests.map(_ -> src).toMap
+  }
+
+  private def pipelineThreads: Set[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-pipeline").toSet
+  }
+
+  test("DAG: a sink starts only after every parent's sink returned; dims = declared closure") {
+    val events = mutable.Buffer.empty[(String, String)]
+    val groups = mutable.Buffer.empty[String]
+    val calls = mutable.Buffer.empty[(String, Set[String])]
+    val sink: (String, Destination, DataFrame) => Unit = (entity, _, df) => {
+      events.synchronized { events += "enter" -> entity }
+      groups.synchronized { groups += spark.sparkContext.getLocalProperty("spark.jobGroup.id") }
+      df.count()
+      Thread.sleep(30)
+      events.synchronized { events += "exit" -> entity }
+    }
+    val entities = Seq("roles", "province", "municipality", "parroquia", "profession", "user",
+      "channel", "profession_user")
+    val stages = entities.map { e =>
+      val dests = if (Set("roles", "user")(e)) Seq(Destination.Postgres, Destination.Cassandra)
+        else Seq(Destination.Postgres)
+      e -> recording(calls, e, dests: _*)
+    }.toMap
+    spark.sparkContext.setJobGroup("dag-spec", "pipeline threads inherit the caller's group")
+    try new Pipeline(spark, _ => Seq(1).toDF("n"), sink).run(stages)
+    finally spark.sparkContext.clearJobGroup()
+
+    for (e <- entities; p <- EntityStages.closure(EntityStages.dependencies.getOrElse(e, Nil))
+      if entities.contains(p)) {
+      val lastExit = events.lastIndexOf("exit" -> p)
+      val firstEnter = events.indexOf("enter" -> e)
+      assert(lastExit >= 0 && lastExit < firstEnter, s"$e entered its sink before $p returned: $events")
+    }
+    assert(groups.toSet === Set("dag-spec"))
+    val seen = calls.toMap
+    assert(seen("roles").isEmpty && seen("province").isEmpty)
+    assert(seen("municipality") === Set("province", "province:postgres"))
+    assert(seen("user") === Set("roles", "roles:postgres", "roles:cassandra", "province",
+      "province:postgres", "municipality", "municipality:postgres", "parroquia",
+      "parroquia:postgres"))
+    assert(seen("profession_user") === seen("user") ++
+      Set("user", "user:postgres", "user:cassandra", "profession", "profession:postgres"))
+    assert(pipelineThreads.isEmpty, "no pool thread may outlive run")
+  }
+
+  test("DAG: independent root entities are in their sinks at the same time") {
+    val latch = new CountDownLatch(2)
+    val metUp = mutable.Buffer.empty[String]
+    val sink: (String, Destination, DataFrame) => Unit = (entity, _, df) => {
+      df.count()
+      latch.countDown()
+      // a sequential loop times out here instead of hanging
+      if (latch.await(10, TimeUnit.SECONDS)) metUp.synchronized { metUp += entity }
+    }
+    val calls = mutable.Buffer.empty[(String, Set[String])]
+    new Pipeline(spark, _ => Seq(1).toDF("n"), sink).run(Map(
+      "province" -> recording(calls, "province", Destination.Postgres),
+      "profession" -> recording(calls, "profession", Destination.Postgres)))
+    assert(metUp.toSet === Set("province", "profession"))
+  }
+
+  test("DAG: a throwing stage is rethrown as is; its dependents never run") {
+    val boom = new IllegalArgumentException("municipality stage failed")
+    val calls = mutable.Buffer.empty[(String, Set[String])]
+    val sunk = mutable.Buffer.empty[String]
+    val sink: (String, Destination, DataFrame) => Unit = (entity, _, df) => {
+      df.count()
+      sunk.synchronized { sunk += entity }
+    }
+    val stages: Map[String, Pipeline#Stage] = Map(
+      "province" -> recording(calls, "province", Destination.Postgres),
+      "profession" -> recording(calls, "profession", Destination.Postgres),
+      "municipality" -> ((_, _) => throw boom),
+      "parroquia" -> recording(calls, "parroquia", Destination.Postgres),
+      "user" -> recording(calls, "user", Destination.Postgres))
+    val thrown = intercept[IllegalArgumentException] {
+      new Pipeline(spark, _ => Seq(1).toDF("n"), sink).run(stages)
+    }
+    assert(thrown eq boom)
+    assert(calls.map(_._1).toSet === Set("province", "profession"))
+    assert(sunk.toSet === Set("province", "profession"))
+    assert(pipelineThreads.isEmpty, "no pool thread may outlive run")
+  }
+
+  test("a written entity whose row count never arrives fails the run") {
+    val calls = mutable.Buffer.empty[(String, Set[String])]
+    val e = intercept[IllegalStateException] {
+      new Pipeline(spark, _ => Seq(1).toDF("n"), (_, _, _) => ())
+        .run(Map("province" -> recording(calls, "province", Destination.Postgres)))
+    }
+    assert(e.getMessage.contains("province/postgres"))
+  }
+
+  /** All 13 source collections as jsonl, every entity non-empty. */
+  private def catalogFixture(): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-catalog")
+    def jsonl(name: String, lines: String*): Unit =
+      java.nio.file.Files.writeString(dir.resolve(s"$name.jsonl"), lines.mkString("", "\n", "\n"))
+    jsonl("roles", """{"_id":"ro1","name":"USER","type":"app"}""",
+      """{"_id":"ro9","name":"SPECIAL","type":"app"}""")
+    jsonl("provinces", """{"_id":"p1","name":"Zulia","key":"ZU","isActive":true}""")
+    jsonl("municipalities", """{"_id":"mu1","name":"Maracaibo","province":"p1","isActive":true}""")
+    jsonl("parroquias",
+      """{"_id":"pa1","name":"Olegario","province":"p1","municipality":"mu1","isActive":true}""")
+    jsonl("professions", """{"_id":"pr1","name":"Teacher","name_es":"Docente"}""")
+    jsonl("entities", """{"_id":"en1","name":"Ministry","organization":"gov"}""")
+    jsonl("users",
+      """{"_id":"u1","displayName":"Ana","province":"p1","municipality":"mu1","parroquia":"pa1","userType":"USER","isActive":true,"profession":["pr1"],"entities":["en1"],"createdAt":"2024-01-01T00:00:00Z"}""",
+      """{"_id":"u2","name":"Bea","userType":"USER","isActive":true,"profession":["pr1"],"createdAt":"2024-01-02T00:00:00Z"}""")
+    jsonl("channels", """{"_id":"c1","name":"Noticias","isActive":true,"createdBy":"u1"}""")
+    jsonl("docs",
+      """{"_id":"f1","name":"docs","type":"FOLDER","onFolder":"/","isActive":true,"specialRole":"ro9"}""",
+      """{"_id":"a1","title":"contrato","fileType":"PDF","onFolder":"/docs","isActive":true,"uploadedBy":"u1"}""")
+    jsonl("lives", """{"_id":"l1","title":"En vivo","channel":"c1","createdBy":"u1","isFinished":false}""")
+    jsonl("rooms", """{"_id":"r1","name":"Duo","createdAt":"2024-02-01T00:00:00Z"}""")
+    jsonl("messages",
+      """{"_id":"m1","room":"r1","sender":"u1","message":"hola","isActive":true,"createdAt":"2024-03-01T10:00:00Z"}""",
+      """{"_id":"m2","room":"r1","sender":"u2","message":"que tal","isActive":true,"createdAt":"2024-03-01T11:00:00Z"}""")
+    jsonl("roommembers", """{"_id":"b1","room":"r1","user":"u1","role":"member"}""",
+      """{"_id":"b2","room":"r1","user":"u2","role":"admin"}""")
+    dir
+  }
+
+  test("full catalog: every stage through the CLI path, each seeing only its closure") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft-catalog-out").toString
+    val (ok, report) = RunEtl.execute(spark,
+      RunEtl.parse(Seq("--source", catalogFixture().toString, "--out", outDir)))
+    assert(ok)
+    assert(report === Map(
+      "roles/postgres" -> 2L, "roles/cassandra" -> 2L, "province/postgres" -> 1L,
+      "municipality/postgres" -> 1L, "parroquia/postgres" -> 1L, "profession/postgres" -> 1L,
+      "entity/postgres" -> 1L, "user/postgres" -> 2L, "user/cassandra" -> 2L,
+      "channel/postgres" -> 1L, "docs/postgres" -> 2L, "live/postgres" -> 1L,
+      "room/cassandra" -> 1L, "message/cassandra" -> 2L, "room_member/cassandra" -> 2L,
+      "profession_user/postgres" -> 2L, "entities_user/postgres" -> 1L))
+    val docs = spark.read.parquet(s"$outDir/postgres/docs")
+      .select("mongo_id", "onFolder").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(docs === Map("f1" -> 0L, "a1" -> 1L))
+  }
+
+  test("building every entity stage runs no Spark job") {
+    val src = new JsonSource(spark, catalogFixture().toString)
+    val sources = Entities.ordered.map(e =>
+      e.name -> EntityStages.normalizeTimestamps(src.collection(e.mongo))).toMap
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val built = Entities.ordered.foldLeft(Map.empty[String, Map[Destination, DataFrame]]) {
+        (acc, e) => acc + (e.name -> EntityStages.all(e.name)(sources(e.name), Pipeline.dims(acc.toSeq)))
+      }
+      assert(built.size === 15)
+      org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext)
+      assert(jobs.get === 0, "stage construction must stay lazy")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("CLI path: partial dry run auto-includes FK parents, target filters loads") {
